@@ -131,18 +131,6 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def token_set_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    from . import batch_kernels
-
-    return pd.Series(
-        batch_kernels.token_set_ratio_batch(
-            [x or "" for x in a], [y or "" for y in b]
-        ),
-        index=a.index, dtype="float64",
-    )
-
-
 _SIM_STRUCT = T.StructType(
     [
         T.StructField("indel", T.DoubleType()),
@@ -552,8 +540,3 @@ def simhash_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda x: hashing.simhash64(hashing.ascii_split(x)) if x else 0).astype(
         "int64"
     )
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def char_trigrams_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: hashing.char_ngrams(x, 3) if x else [])

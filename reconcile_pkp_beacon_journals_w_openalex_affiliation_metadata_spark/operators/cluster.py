@@ -11,8 +11,10 @@ Scale notes:
 - every round is one shuffle (groupBy node) + one broadcast-size-agnostic
   join on node; ``localCheckpoint()`` after each round truncates lineage so
   the plan doesn't grow across iterations (SURVEY.md §7.4 risk (e)),
-- convergence = the edge multiset stops changing, tested with a cheap
-  count + xxhash64 checksum aggregate (no full exceptAll at scale),
+- convergence = the edge multiset stops changing, tested every round
+  with a cheap count + xxhash64 checksum aggregate (no full exceptAll at
+  scale); hitting the round cap raises instead of rolling up an
+  unconverged graph,
 - node ids are strings; min() over the string total order picks the root.
 """
 
@@ -22,27 +24,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _large_star(edges: DataFrame, dedup: bool = True) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every neighbor v > u to min(N(u) ∪ {u}).
 
-    ``dedup=False`` skips the output ``distinct`` (one Exchange less per
-    round): the composed round ``_small_star(_large_star(e))`` is
-    duplicate-insensitive — small-star's groupBy-min ignores multiplicity
-    and its own final distinct collapses the round's output — and the
-    un-deduped intermediate is bounded by the input edge count, so the
-    round result is identical while shuffling one fewer pass.
+    No output ``distinct`` (one Exchange less per round): the composed
+    round ``_small_star(_large_star(e))`` is duplicate-insensitive —
+    small-star's groupBy-min ignores multiplicity and its own final
+    distinct collapses the round's output — and the un-deduped
+    intermediate is bounded by the input edge count, so the round result
+    is identical while shuffling one fewer pass.
     """
     und = edges.select("u", "v").unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     mins = und.groupBy("u").agg(F.min("v").alias("mv"))
     mins = mins.withColumn("m", F.least(F.col("mv"), F.col("u"))).drop("mv")
-    out = (
+    return (
         und.join(mins, "u")
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
-    return out.distinct() if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -76,9 +77,6 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    checkpoint_each_round: bool = True,
-    rounds_per_check: int = 1,
-    assume_dedup: bool = False,
     assume_no_self_loops: bool = False,
 ) -> DataFrame:
     """(node, cluster_id) for every node appearing in ``edges``(u, v).
@@ -86,58 +84,50 @@ def connected_components(
     cluster_id = min node id of the component (deterministic, order-free —
     the CC invariants of SURVEY.md §5.5).
 
-    ``assume_dedup=True`` skips the defensive input ``distinct`` — pass it
-    when the caller already deduplicated (j5/j6 do); the star rounds are
-    multiplicity-insensitive, so this only drops a redundant shuffle, never
-    changes labels. The input plan is deliberately NOT persisted: an A/B
+    Raises ``RuntimeError`` when ``max_iter`` star rounds pass without two
+    equal consecutive checksums: the roll-up below is correct only on a
+    converged star graph, and an unconverged one yields duplicate,
+    conflicting rows. The input plan is deliberately NOT persisted: an A/B
     at the 10x proxy measured the cache materialization barrier costing
-    MORE (+1.5s) than it saves, and since the r6 roll-up rewrite the input
-    plan is evaluated ONCE anyway (round 0) — the roll-up reads only the
-    converged, checkpointed star graph (plus, when self-loops are
-    possible, one filter-pushed pass for them).
+    MORE (+1.5s) than it saves, and the input plan is evaluated ONCE
+    anyway (round 0) — the roll-up reads only the converged, checkpointed
+    star graph (plus, when self-loops are possible, one filter-pushed pass
+    for them).
 
-    ``assume_no_self_loops=True`` additionally skips the self-loop
-    singleton pass — pass it when no input row can have ``u == v`` (pair
-    generators emitting ``left < right``, side-prefixed bipartite keys).
-    A caller whose edges CAN carry ``u == v`` rows (e.g. the incremental
-    plan's seed edges, which encode prior singletons as ``(r, r)``) must
-    leave it False or those nodes vanish from the output.
+    ``assume_no_self_loops=True`` skips the self-loop singleton pass —
+    pass it when no input row can have ``u == v`` (pair generators
+    emitting ``left < right``, side-prefixed bipartite keys). A node seen
+    ONLY in ``u == v`` rows then vanishes from the output. The incremental
+    plan's seed edges carry a ``(r, r)`` row for the root of every prior
+    cluster (each has at least 2 members); that plan keeps the default.
     """
-    e = edges.select("u", "v").where(F.col("u") != F.col("v"))
-    if not assume_dedup:
-        e = e.distinct()
+    e = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct()
     prev = None
-    for i in range(max_iter):
-        e = _small_star(_large_star(e, dedup=False))
-        if checkpoint_each_round:
-            # lazy: the next action materializes the checkpoint, so a round
-            # costs ONE job; convergence is tested every
-            # ``rounds_per_check`` rounds. Default 1: the checksum is a
-            # cheap count+sum agg over the already-checkpointed edges,
-            # while a wasted star round is a full groupBy+join+distinct
-            # pass — checking every round converges in the minimum number
-            # of rounds (r6: measured 4.4s -> 3.2s on the j5 graph, 5.9s ->
-            # 5.1s on the flagship edge set at sf1.0; the same trade holds
-            # at corpus scale where rounds dwarf the agg even more).
-            # Checkpointing EVERY round is load-bearing, not
-            # just lineage hygiene: a round reads its input from several
-            # places (both union branches of ``und`` and the groupBy), so an
-            # un-truncated 2-round plan recomputes the previous round
-            # multiplicatively — measured 5x slower at sf1.0 when the
-            # checkpoint was moved to check boundaries only.
-            e = e.localCheckpoint(eager=False)
-        if (i + 1) % rounds_per_check == 0 or i == max_iter - 1:
-            cur = _checksum(e)
-            if cur == prev:
-                break
-            prev = cur
+    for _ in range(max_iter):
+        # Checkpointing EVERY round is load-bearing, not just lineage
+        # hygiene: a round reads its input from several places (both union
+        # branches of ``und`` and the groupBy), so an un-truncated 2-round
+        # plan recomputes the previous round multiplicatively — measured 5x
+        # slower at sf1.0 with checkpoints at check boundaries only. Lazy:
+        # the checksum action materializes it, so a round costs ONE job.
+        # Checking every round converges in the minimum number of rounds —
+        # the checksum is a cheap count+sum agg, a wasted star round a full
+        # groupBy+join+distinct pass (r6: 4.4s -> 3.2s on the j5 graph).
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        cur = _checksum(e)
+        if cur == prev:
+            break
+        prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components: no convergence after {max_iter} rounds"
+            f" (max_iter={max_iter})"
+        )
     # Converged star graph: every edge is (member, root), members and roots
     # are disjoint, and the rounds preserve the (u != v)-filtered node set —
     # so labels ∪ distinct-roots IS the full non-isolated node assignment.
-    # The roll-up therefore reads ONLY the checkpointed converged edges:
-    # the pre-r6 ``all_nodes`` formulation re-evaluated the ENTIRE upstream
-    # edge DAG a second time (for t12/t13 that is the whole LSH band join)
-    # and paid a 2|E|-row distinct plus an anti-join against the labels.
+    # The roll-up therefore reads ONLY the checkpointed converged edges,
+    # never the upstream edge DAG a second time.
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     roots = (
         e.select(F.col("v").alias("node"))

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import random
 import statistics
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -55,6 +57,20 @@ def test_cc_chain(spark):
     got = _run_cc(spark, edges)
     assert set(got.values()) == {"n000"}
     assert len(got) == 41
+
+
+def test_cc_round_cap_raises_instead_of_wrong_clusters(spark):
+    # a shuffled path needs ~log2(200) star rounds; an unconverged graph
+    # must never reach the roll-up (it yields duplicate, conflicting rows)
+    ids = [f"p{i:03d}" for i in range(200)]
+    random.Random(7).shuffle(ids)
+    df = spark.createDataFrame(list(zip(ids, ids[1:])), schema="u string, v string")
+    for cap in (3, 0):
+        with pytest.raises(RuntimeError, match=f"max_iter={cap}"):
+            connected_components(df, max_iter=cap).collect()
+    got = connected_components(df).collect()
+    assert len(got) == 200
+    assert {r["cluster_id"] for r in got} == {min(ids)}
 
 
 def test_cc_two_components_and_star(spark):

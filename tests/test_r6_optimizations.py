@@ -1,8 +1,9 @@
 """Focused tests for the r6 optimization internals: the per-bucket ANN
 top-k kernel, the Arrow-batched norm, the one-shuffle LSH cap, and the
-CC assume_dedup fast path — each asserting equivalence with the (slower)
-formulation it replaced, on adversarial inputs the driver data does not
-exercise (rounding-boundary ties, sub-k buckets, null embeddings)."""
+CC roll-up and its assume_no_self_loops fast path — each asserting
+equivalence with the (slower) formulation it replaced, on adversarial
+inputs the query datasets do not exercise (rounding-boundary ties, sub-k
+buckets, null embeddings)."""
 
 from __future__ import annotations
 
@@ -236,20 +237,6 @@ def test_lsh_window_cap_equals_antijoin_cap(spark):
     assert len(new) > 0
 
 
-def test_cc_assume_dedup_labels_identical(spark):
-    from reconcile_pkp_beacon_journals_w_openalex_affiliation_metadata_spark.operators.cluster import (
-        connected_components,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")], ["u", "v"]
-    ).distinct()
-    base = {tuple(r) for r in connected_components(edges).collect()}
-    fast = {tuple(r) for r in connected_components(edges, assume_dedup=True).collect()}
-    assert base == fast
-    assert ("f", "f") in fast  # self-loop-only node kept as singleton
-
-
 def test_cc_rollup_selfloops_mixed_with_real_edges(spark):
     """r6 roll-up rewrite: roots come from distinct cluster_ids of the
     converged star graph and self-loop singletons from a filtered input
@@ -291,9 +278,7 @@ def test_cc_assume_no_self_loops_identical_when_none(spark):
     base = {tuple(r) for r in connected_components(edges).collect()}
     fast = {
         tuple(r)
-        for r in connected_components(
-            edges, assume_dedup=True, assume_no_self_loops=True
-        ).collect()
+        for r in connected_components(edges, assume_no_self_loops=True).collect()
     }
     assert base == fast
 
